@@ -280,8 +280,9 @@ def _load_prev() -> tuple[dict[str, float], float | None, str | None]:
                     rec.get("sf") == _sf_from_dir(SF_DIR)
                     and rec.get("queries")
                     # a record from a different core count is not a
-                    # regression baseline (pre-cpus records pass)
-                    and rec.get("cpus", cpus) == cpus
+                    # regression baseline; a pre-cpus record only
+                    # matches a run that leaves the core count unset
+                    and rec.get("cpus", "*") == cpus
                 ):
                     prev, src = rec["queries"], os.path.basename(_HISTORY)
                     prev_calib = (

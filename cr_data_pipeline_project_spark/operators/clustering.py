@@ -2,10 +2,11 @@
 
 Replaces the IVF centroid "stand-in" (a deterministic id-prefix
 sample) with a real fit: deterministic hash-sample seeding, then
-``n_iter`` Lloyd rounds expressed entirely as DataFrame ops — the
-assign step is a broadcast join against the (tiny) centroid table
-reduced by a map-side-combining argmin aggregate, the update step a
-``posexplode`` + two-level groupBy producing element-wise means.
+``n_iter`` Lloyd rounds — the assign step is one BLAS GEMM per Arrow
+batch against the (tiny) collected centroid table, the update step a
+per-position ``avg`` groupBy producing element-wise means.
+``kmeans_assign`` keeps the pure-JVM form: a broadcast join reduced
+by a map-side-combining argmin aggregate.
 
 Reference parity: the reference engine has no clustering operator;
 this exists to make the IVF ANN path (operators/similarity.py,
@@ -15,18 +16,15 @@ for real corpora.
 
 Scale notes (100 TB / billions of vectors)
 ------------------------------------------
-- Per iteration: one broadcast join (centroids are k×dim doubles —
-  tiny, always under the broadcast threshold) and two aggregations.
-  The argmin aggregate partial-combines map-side, so the first
-  shuffle carries ≤1 row per vector (never the N×k scored rows); the
-  mean aggregate partial-combines (cid, pos) sums, so the second
-  shuffle carries ~k×dim×n_partitions partial rows, independent of
-  corpus size.
-- A window (`row_number over partitionBy(_id)`) would shuffle all
-  N×k scored rows — the aggregate argmin is the scalable shape.
-- Iterations are driver-side loop steps over distributed plans; each
-  new centroid table ``localCheckpoint``s to cut lineage, exactly
-  like operators/graph.py's label propagation.
+- Per iteration: one map-side GEMM pass (centroids are k×dim doubles
+  — tiny, shipped in the task closure) and one aggregation. The mean
+  aggregate partial-combines per-position sums, so its shuffle
+  carries ~k×dim×n_partitions partial values, independent of corpus
+  size. In ``kmeans_assign`` the argmin aggregate partial-combines
+  map-side, so its shuffle carries ≤1 row per vector (a window
+  would shuffle all N×k scored rows).
+- Iterations are driver-side loop steps: each generation's k rows
+  are collected, and only the final one ``localCheckpoint``s.
 - Seeding samples the k rows with the smallest ``xxhash64(id,
   seed)`` — engine- and partitioning-independent. The fitted means
   are float-sum-order dependent in the last ulps (as in every
@@ -98,16 +96,14 @@ def kmeans_fit(
     vec_col: str = "emb",
     n_iter: int = 5,
     seed: int = 42,
-    engine: str = "arrow",
 ) -> DataFrame:
     """Fit k centroids with Lloyd's algorithm; returns
     ``(cid int, cv array<double>)``. The Lloyd loop's assign step
-    defaults to the Arrow GEMM engine (see :func:`_assign`) — the
-    fit is ulp-tolerant by contract (tests assert inertia descent
-    and assignment quality, never bit-exact centroids), and the
-    GEMM keeps per-iteration cost flat as k grows toward the √N
-    centroid counts a real IVF fit wants. Pass ``engine='expr'``
-    for the pure-JVM fold loop."""
+    runs the Arrow GEMM engine (see :func:`_assign`) — the fit is
+    ulp-tolerant by contract (tests assert inertia descent and
+    assignment quality, never bit-exact centroids), and the GEMM
+    keeps per-iteration cost flat as k grows toward the √N centroid
+    counts a real IVF fit wants."""
     vecs = corpus.select(
         F.col(id_col).alias("_id"), as_double_vec(vec_col).alias("vd")
     ).localCheckpoint(eager=True)
@@ -146,35 +142,27 @@ def kmeans_fit(
             "cid", arr.alias("cv")
         )
 
-    if engine == "arrow":
-        # Lloyd generations stay DRIVER-SIDE between iterations (the
-        # pq_fit round-12 trim): the k-row codebook is collect-
-        # bounded by the same contract the Arrow assigner already
-        # relies on (it ships the table in the task closure), so the
-        # seed checkpoint, the per-iteration generation checkpoints
-        # AND the assigner's per-iteration re-collect all fold into
-        # one collect per generation; dim rides the seed collect.
-        # Only the FINAL generation checkpoints (the returned
-        # DataFrame keeps its round-11 form).
-        rows = seeds.collect()
-        if not rows:
-            return seeds.localCheckpoint(eager=True)
-        dim = max(len(r["cv"]) for r in rows)
-        cents = None
-        for i in range(n_iter):
-            assigned = _assign(vecs, rows, engine="arrow")
-            upd = _update(assigned, dim)
-            if i < n_iter - 1:
-                rows = upd.collect()
-            else:
-                cents = upd.localCheckpoint(eager=True)
-        return cents
-
-    cents = seeds.localCheckpoint(eager=True)
-    dim = int(cents.agg(F.max(F.size("cv"))).first()[0])
-    for _ in range(n_iter):
-        assigned = _assign(vecs, cents, engine=engine)
-        cents = _update(assigned, dim).localCheckpoint(eager=True)
+    # Lloyd generations stay DRIVER-SIDE between iterations (the
+    # pq_fit round-12 trim): the k-row codebook is collect-bounded by
+    # the same contract the Arrow assigner already relies on (it ships
+    # the table in the task closure), so the seed checkpoint, the
+    # per-iteration generation checkpoints AND the assigner's
+    # per-iteration re-collect all fold into one collect per
+    # generation; dim rides the seed collect. Only the FINAL
+    # generation checkpoints (the returned DataFrame keeps its
+    # round-11 form).
+    rows = seeds.collect()
+    if not rows:
+        return seeds.localCheckpoint(eager=True)
+    dim = max(len(r["cv"]) for r in rows)
+    cents = None
+    for i in range(n_iter):
+        assigned = _assign(vecs, rows, engine="arrow")
+        upd = _update(assigned, dim)
+        if i < n_iter - 1:
+            rows = upd.collect()
+        else:
+            cents = upd.localCheckpoint(eager=True)
     return cents
 
 

@@ -55,19 +55,6 @@ def _count_in(tok: Column, vocab: tuple[str, ...]) -> Column:
     return F.size(F.filter(tok, lambda t: F.array_contains(arr, t)))
 
 
-def token_stats(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """Adds n_tokens / n_chars / bpe_est (a 4-chars-per-token BPE
-    estimate, the standard back-of-envelope for LLM token budgeting)."""
-    tok = tokens(text_col)
-    n_chars = F.length(F.col(text_col))
-    return df.select(
-        "*",
-        F.size(tok).alias("n_tokens"),
-        n_chars.alias("n_chars_computed"),
-        F.floor((n_chars + 3) / 4).cast("bigint").alias("bpe_est"),
-    )
-
-
 def quality_score(
     df: DataFrame, text_col: str = "text", stopwords: tuple[str, ...] = STOPWORDS
 ) -> DataFrame:

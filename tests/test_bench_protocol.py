@@ -147,3 +147,25 @@ def test_contamination_note_fires_on_window_pattern():
     # broad real regression: unflagged rest is ALSO 1.3x → no note
     times_broad = {f"q{i}": (3.0 if i < 10 else 1.3) for i in range(40)}
     assert bench._contamination_note(times_broad, prev, flagged) is None
+
+
+def test_cpusless_history_record_only_matches_unset_core_count(
+    tmp_path, monkeypatch
+):
+    """A history record written before runs were stamped with their
+    core count is a baseline only for a run that leaves
+    SPARK_GRAFT_CPUS unset, never for a pinned core count."""
+    import json
+
+    hist = tmp_path / "history.jsonl"
+    rec = {"sf": bench._sf_from_dir(bench.SF_DIR), "queries": {"q_legacy": 1.0}}
+    hist.write_text(json.dumps(rec) + "\n")
+    monkeypatch.setattr(bench, "_HISTORY", str(hist))
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "8")
+    prev, _, src = bench._load_prev()
+    assert src != hist.name and "q_legacy" not in prev
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS")
+    prev, _, src = bench._load_prev()
+    assert (prev, src) == ({"q_legacy": 1.0}, hist.name)

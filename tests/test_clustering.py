@@ -163,3 +163,13 @@ def test_arrow_assign_empty_and_string_ids(spark, emb):
     rows = out.collect()
     assert len(rows) == vecs.count()
     assert all(r["id"].startswith("doc-") for r in rows)
+
+
+def test_fit_on_empty_corpus_returns_empty_centroids(spark, emb):
+    """An empty corpus fits to zero centroids with the documented
+    (cid int, cv array<double>) schema, not a TypeError."""
+    cents = clustering.kmeans_fit(
+        emb.limit(0), k=3, id_col="vec_id", vec_col="embedding", n_iter=2
+    )
+    assert cents.collect() == []
+    assert cents.schema.simpleString() == "struct<cid:int,cv:array<double>>"

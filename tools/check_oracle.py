@@ -30,6 +30,16 @@ TABLES = (
 )
 
 
+def duck_views(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per fixture table in ``sf_dir``."""
+    con = duckdb.connect()
+    for t in TABLES:
+        p = os.path.join(sf_dir, f"{t}.parquet")
+        if os.path.exists(p):
+            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    return con
+
+
 def _norm_val(v):
     """Canonical string for a single value (exact, not rounded)."""
     if v is None:
@@ -132,11 +142,7 @@ def main():
 
     spark = get_session("oracle-check", shuffle_partitions=16)
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = os.path.join(args.sf, f"{t}.parquet")
-        if os.path.exists(p):
-            con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = duck_views(args.sf)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
